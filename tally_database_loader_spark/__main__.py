@@ -23,6 +23,10 @@ Sinks (``database.technology``):
 - ``mssql`` / ``mysql`` / ``postgres``: JDBC batched inserts with the
   reference's batching levers (B1-B4).
 
+Tables load concurrently, unlike the reference's one-at-a-time loop:
+each table's write and post-write count runs on a thread pool capped at
+Spark's default parallelism (no setting; ``run_tables``).
+
 Table definitions come from ``tally.definition`` when it points at an
 existing YAML file (A4), else the built-in 22-table reference model.
 """
@@ -67,12 +71,71 @@ def _extract(spark: SparkSession, cfg, specs) -> dict[str, DataFrame]:
 
 
 class SyncAborted(RuntimeError):
-    """Raised between tables when a cooperative abort was requested."""
+    """Raised before a table starts when a cooperative abort was
+    requested."""
 
 
 def _check_abort(aborted) -> None:
     if aborted is not None and aborted():
         raise SyncAborted("sync aborted")
+
+
+def run_tables(spark: SparkSession, frames: dict[str, DataFrame], load,
+               log=None, aborted=None) -> dict[str, int]:
+    """Run ``load(name, df) -> rows`` (one table's write plus its
+    post-write row count) for every table, concurrently.
+
+    The tables of a sync are independent and each one's parse is a
+    single scan task, so one table at a time leaves most cores idle. The
+    pool holds ``min(len(frames), defaultParallelism)`` threads; each
+    table runs with its own copy of the caller's local properties and
+    tags, so the caller's job group and description still tag the table's
+    jobs. ``aborted`` is checked
+    before each table starts: after an abort or a failed table, tables in
+    flight finish, the rest never start, and once the pool drains the
+    error of the first failed table in definition order is re-raised.
+    ``log.log_table`` runs on the calling thread, in definition order,
+    with each finished table's own seconds."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+    if not frames:
+        return {}
+    stop = threading.Event()
+
+    def one(name: str, df: DataFrame):
+        if stop.is_set():
+            return None
+        try:
+            _check_abort(aborted)
+            t0 = time.perf_counter()
+            rows = load(name, df)
+        except BaseException:
+            stop.set()
+            raise
+        return rows, time.perf_counter() - t0
+
+    size = min(len(frames), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=size) as pool:
+        # one wrap per table: a wrap copies the properties once, and Spark
+        # writes per-query ids into them, so tables must not share a copy
+        futures = {name: pool.submit(inheritable_thread_target(spark)(one),
+                                     name, df)
+                   for name, df in frames.items()}
+    counts: dict[str, int] = {}
+    error = None
+    for name, fut in futures.items():
+        if fut.exception() is not None:
+            error = error or fut.exception()
+        elif fut.result() is not None:
+            rows, seconds = fut.result()
+            counts[name] = rows
+            if log is not None:
+                log.log_table(name, rows, seconds)
+    if error is not None:
+        raise error
+    return counts
 
 
 def _load(spark: SparkSession, cfg, frames: dict[str, DataFrame],
@@ -81,41 +144,33 @@ def _load(spark: SparkSession, cfg, frames: dict[str, DataFrame],
     db = cfg["database"]
     tech = db["technology"]
     loadpath = str(db.get("loadpath", "") or "output")
-    counts: dict[str, int] = {}
     if tech == "parquet":
         from .operators.table_format import make_store
         store = make_store(loadpath, spark=spark,
                            fmt=str(db.get("format", "manifest") or "manifest"))
-        for name, df in frames.items():
-            _check_abort(aborted)
-            t0 = time.perf_counter()
+
+        def load(name, df):
             store.write(df, name)
-            counts[name] = store.read(spark, name).count()
-            log.log_table(name, counts[name], time.perf_counter() - t0)
-        return counts
-    if tech in ("csv", "json"):
+            return store.read(spark, name).count()
+    elif tech in ("csv", "json"):
         os.makedirs(loadpath, exist_ok=True)
         write = writers.write_csv if tech == "csv" else writers.write_json
-        for name, df in frames.items():
-            _check_abort(aborted)
-            t0 = time.perf_counter()
+
+        def load(name, df):
             write(df, os.path.join(loadpath, f"{name}.{tech}"),
                   single_file=True)
-            counts[name] = df.count()
-            log.log_table(name, counts[name], time.perf_counter() - t0)
-        return counts
-    if tech in ("mssql", "mysql", "postgres"):
+            return df.count()
+    elif tech in ("mssql", "mysql", "postgres"):
         url = _jdbc_url(tech, db)
         creds = {"user": str(db["username"]), "password": str(db["password"])}
-        for name, df in frames.items():
-            _check_abort(aborted)
-            t0 = time.perf_counter()
+
+        def load(name, df):
             writers.write_jdbc(df, url, f"{db['schema']}.{name}",
                                technology=tech, properties=creds)
-            counts[name] = df.count()
-            log.log_table(name, counts[name], time.perf_counter() - t0)
-        return counts
-    raise SystemExit(f"unsupported database.technology: {tech}")
+            return df.count()
+    else:
+        raise SystemExit(f"unsupported database.technology: {tech}")
+    return run_tables(spark, frames, load, log, aborted)
 
 
 def _jdbc_url(tech: str, db) -> str:
@@ -138,22 +193,19 @@ def run_import(spark: SparkSession, cfg, log,
     the store (the very first run, or one newly added to the
     definition) bootstraps with a full load first — the reference's
     first-run behavior, applied per table so a definition edit can
-    never be silently skipped. ``aborted`` is the cooperative-stop
-    predicate (checked between tables)."""
+    never be silently skipped. Tables load concurrently (``run_tables``).
+    ``aborted`` is the cooperative-stop predicate, checked before the
+    merge and before each table starts."""
     specs = _load_specs(cfg)
     frames = _extract(spark, cfg, specs)
     db = cfg["database"]
     if str(cfg.get("tally", "sync")) == "incremental" \
             and db["technology"] == "parquet":
-        import time as _t
-
         from .operators.incremental import IncrementalSync
         from .operators.table_format import make_store
         store = make_store(str(db.get("loadpath", "") or "output"),
                            spark=spark,
                            fmt=str(db.get("format", "manifest") or "manifest"))
-        eng = IncrementalSync(spark, store, specs)
-        t0 = _t.perf_counter()
         # diff/merge over the already-synced tables FIRST — bootstrapping
         # a new table would advance the sink AlterId watermark and mask
         # the pending changes of the old ones — then full-load any table
@@ -162,17 +214,14 @@ def run_import(spark: SparkSession, cfg, log,
         existing = {t: df for t, df in frames.items() if store.exists(t)}
         if existing:
             _check_abort(aborted)
-            eng.incremental_sync_frames(existing)
-        for name, df in frames.items():
-            if not store.exists(name):
-                _check_abort(aborted)
+            IncrementalSync(spark, store, specs).incremental_sync_frames(
+                existing)
+
+        def load(name, df):
+            if name not in existing:
                 store.write(df, name)
-        counts = {t: store.read(spark, t).count() for t in frames
-                  if store.exists(t)}
-        dt = _t.perf_counter() - t0
-        for name in sorted(counts):
-            log.log_table(name, counts[name], dt / max(len(counts), 1))
-        return counts
+            return store.read(spark, name).count()
+        return run_tables(spark, frames, load, log, aborted)
     return _load(spark, cfg, frames, log, aborted=aborted)
 
 

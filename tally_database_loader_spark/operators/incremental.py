@@ -605,12 +605,13 @@ class IncrementalSync:
     # -- full sync: truncate-and-load (reference B9 truncate + bulk load) --
 
     def full_sync(self, source_by_root: dict[str, DataFrame]) -> dict[str, int]:
+        from ..__main__ import run_tables
         frames = extract_all(source_by_root, self.specs, include_alterid=True)
-        counts = {}
-        for name, df in frames.items():
+
+        def load(name, df):
             self.store.write(df, name)
-            counts[name] = self.store.read(self.spark, name).count()
-        return counts
+            return self.store.read(self.spark, name).count()
+        return run_tables(self.spark, frames, load)
 
     # -- incremental sync --------------------------------------------------
 
@@ -687,7 +688,6 @@ class IncrementalSync:
             stats["skipped"] = True
             return stats
 
-        removed_keys: dict[str, DataFrame] = {}
         changed_keys: dict[str, DataFrame] = {}
         for name in primaries:
             if not self.store.exists(name):
@@ -734,7 +734,6 @@ class IncrementalSync:
                             # hold duplicate guids (ADVICE r10)
                             .select("guid").distinct()
                             .localCheckpoint(eager=True))
-            removed_keys[name] = remove
             # E8: fresh rows — alterid beyond the sink watermark (C8), or
             # re-extraction of modified rows (their alterid > old one
             # too). Derived from the SOURCE alone: a source row with
@@ -745,6 +744,13 @@ class IncrementalSync:
             # old code paid a full sink scan for was provably vacuous.
             fresh = (frames[name].filter(F.col("alterid") > wm)
                                  .localCheckpoint(eager=True))
+            stats["deleted"][name] = remove.count()
+            stats["appended"][name] = fresh.count()
+            if not (stats["deleted"][name] or stats["appended"][name]):
+                # untouched table: no commit, no cascade delete over its
+                # children, and no entry in changed_keys, so E9 skips
+                # every child whose parents are all unchanged
+                continue
             # E6: partition-scoped commit — only storage partitions
             # holding a removed or fresh guid are re-read AND rewritten;
             # the rest carry forward by manifest reference. scoped_base
@@ -756,8 +762,6 @@ class IncrementalSync:
             merged = (base.join(F.broadcast(remove), "guid", "left_anti")
                           .unionByName(fresh))
             self.store.write_scoped(merged, name, touched)
-            stats["deleted"][name] = remove.count()
-            stats["appended"][name] = fresh.count()
 
             # E7: cascade delete through FK edges; children of fresh
             # (new/modified) parents are re-derived from the source.

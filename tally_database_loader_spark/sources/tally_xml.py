@@ -182,8 +182,10 @@ def read_tdl_response(spark: SparkSession, path: str,
     """
     raw = spark.read.option("lineSep", "<F01>").text(path)
     # record 0 is the envelope header (no </F01> terminator on its text);
-    # data records all contain at least one field end tag.
-    rows = raw.filter(F.col("value").contains("</F"))
+    # data records all contain at least one numbered field end tag. The
+    # header of a Derived table's response can open with the outer line's
+    # <FLDBLANK></FLDBLANK>, so a bare "</F" would keep it.
+    rows = raw.filter(F.col("value").rlike(r"</F\d+>"))
     clean = (
         F.regexp_replace(                       # line breaks + tabs → space
             F.regexp_replace(F.col("value"), r"[\r\n]+", ""), r"\t", " "))

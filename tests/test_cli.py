@@ -219,6 +219,181 @@ def test_run_import_cooperative_abort(spark, setup):
         run_import(spark, cfg, log, aborted=lambda: True)
 
 
+_MULTI = ("mst_unit", "mst_group", "mst_godown", "mst_category",
+          "mst_cost_centre")
+
+
+def _multi_setup(tmp_path):
+    """A five-table definition and dump (table i holds i + 1 rows) with a
+    parquet sink; returns the config and the expected rows per table."""
+    import yaml
+    doc = {"master": [{
+        "name": t, "collection": t.split("_", 1)[1].title(),
+        "fields": [{"name": "guid", "field": "$Guid", "type": "text"},
+                   {"name": "name", "field": "$Name", "type": "text"}]}
+        for t in _MULTI], "transaction": []}
+    defpath = tmp_path / "multi.yaml"
+    defpath.write_text(yaml.safe_dump(doc, sort_keys=False), encoding="utf-8")
+    d = tmp_path / "multi_dump"
+    d.mkdir()
+    want = {}
+    for i, t in enumerate(_MULTI):
+        want[t] = {(f"{t}-{j}", f"{t} row {j}") for j in range(i + 1)}
+        body = "\r\n".join(f"  <F01>{g}</F01><F02>{n}</F02>"
+                           for g, n in sorted(want[t]))
+        (d / f"{t}.xml").write_text(f"<ENVELOPE>\r\n{body}\r\n</ENVELOPE>",
+                                    encoding="utf-8")
+    from tally_database_loader_spark.config import load_config
+    cfg = load_config(json.dumps({
+        "database": {"technology": "parquet",
+                     "loadpath": str(tmp_path / "multi_store")},
+        "tally": {"definition": str(defpath), "dumpdir": str(d)}}), [])
+    return cfg, want
+
+
+class _RecordingLog:
+    def __init__(self):
+        self.tables: list[tuple[str, int, float]] = []
+
+    def log_table(self, table, rows, seconds):
+        import threading
+        assert threading.current_thread() is threading.main_thread()
+        self.tables.append((table, rows, seconds))
+
+
+def test_run_import_loads_tables_concurrently(spark, tmp_path):
+    """The per-table runner: every table loads, the counts match, the
+    import log gets one line per table in definition order from the
+    calling thread, and the caller's job group tags the tables' jobs
+    although they run on pool threads."""
+    from tally_database_loader_spark.__main__ import run_import
+    from tally_database_loader_spark.operators.incremental import ParquetStore
+    cfg, want = _multi_setup(tmp_path)
+    log = _RecordingLog()
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-concurrent-load", "concurrent load test")
+    try:
+        counts = run_import(spark, cfg, log)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == {t: len(rows) for t, rows in want.items()}
+    assert list(counts) == list(_MULTI)
+    assert [(t, n) for t, n, _ in log.tables] == list(counts.items())
+    assert all(s > 0 for _, _, s in log.tables)
+    store = ParquetStore(str(tmp_path / "multi_store"))
+    for t, rows in want.items():
+        assert {tuple(r) for r in store.read(spark, t).collect()} == rows
+    # a write job and a count job per table, all under the caller's group
+    jobs = sc.statusTracker().getJobIdsForGroup("cli-concurrent-load")
+    assert len(jobs) >= 2 * len(_MULTI)
+
+
+def test_run_import_abort_skips_tables_not_started(spark, tmp_path):
+    """Abort is checked before each table starts: once the predicate
+    turns true, run_import raises SyncAborted and no table that had not
+    started has a version in the store."""
+    import threading
+
+    from tally_database_loader_spark.__main__ import SyncAborted, run_import
+    from tally_database_loader_spark.operators.incremental import ParquetStore
+    cfg, _ = _multi_setup(tmp_path)
+    lock, checks = threading.Lock(), [0]
+
+    def aborted():
+        with lock:
+            checks[0] += 1
+            return checks[0] > 1   # true once the first table has started
+
+    log = _RecordingLog()
+    with pytest.raises(SyncAborted):
+        run_import(spark, cfg, log, aborted=aborted)
+    store = ParquetStore(str(tmp_path / "multi_store"))
+    loaded = [t for t in _MULTI if store.exists(t)]
+    assert len(loaded) == 1
+    assert [t for t, _, _ in log.tables] == loaded
+
+
+def test_run_tables_abort_under_thread_contention(spark):
+    """Stress the runner's stop logic with 200 Python-only loads and a
+    tiny switch interval: exactly the tables whose abort check passed are
+    loaded and logged, in definition order; without an abort every table
+    loads."""
+    import sys
+    import threading
+
+    from tally_database_loader_spark.__main__ import SyncAborted, run_tables
+    names = [f"t{i:03d}" for i in range(200)]
+    frames = dict.fromkeys(names)
+    lock, checks, loaded = threading.Lock(), [0], []
+
+    def aborted():
+        with lock:
+            checks[0] += 1
+            return checks[0] > 50
+
+    def load(name, _df):
+        with lock:
+            loaded.append(name)
+        return int(name[1:])
+
+    log = _RecordingLog()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with pytest.raises(SyncAborted):
+            run_tables(spark, frames, load, log, aborted)
+        assert len(loaded) == 50
+        assert [t for t, _, _ in log.tables] == sorted(loaded)
+        counts = run_tables(spark, frames, load)
+    finally:
+        sys.setswitchinterval(interval)
+    assert counts == {t: int(t[1:]) for t in names}
+    assert list(counts) == names
+
+
+def test_run_tables_gives_each_table_its_own_local_properties(spark):
+    """Spark keeps per-query ids in a thread's local properties, so tables
+    loading at the same time must not share one copy: a property one
+    table sets is not seen by another, nor by the caller."""
+    import threading
+
+    from tally_database_loader_spark.__main__ import run_tables
+    sc = spark.sparkContext
+    n = min(4, sc.defaultParallelism)
+    barrier = threading.Barrier(n, timeout=60)
+    seen = {}
+
+    def load(name, _df):
+        sc.setLocalProperty("tally.test.table", name)
+        barrier.wait()              # every table has set its value
+        seen[name] = sc.getLocalProperty("tally.test.table")
+        return 0
+
+    names = [f"t{i}" for i in range(n)]
+    run_tables(spark, dict.fromkeys(names), load)
+    assert seen == {t: t for t in names}
+    assert sc.getLocalProperty("tally.test.table") is None
+
+
+def test_run_import_surfaces_a_table_error(spark, tmp_path, monkeypatch):
+    """A table whose write fails fails the sync with that error."""
+    from tally_database_loader_spark.__main__ import run_import
+    from tally_database_loader_spark.operators.incremental import ParquetStore
+    cfg, _ = _multi_setup(tmp_path)
+    write = ParquetStore.write
+
+    def failing_write(self, df, table):
+        if table == "mst_godown":
+            raise OSError("disk full writing mst_godown")
+        return write(self, df, table)
+
+    monkeypatch.setattr(ParquetStore, "write", failing_write)
+    with pytest.raises(OSError, match="disk full writing mst_godown"):
+        run_import(spark, cfg, _RecordingLog())
+    assert not ParquetStore(str(tmp_path / "multi_store")).exists("mst_godown")
+
+
 def test_gui_serve_posts_config_and_syncs(spark, setup, tmp_path):
     """GUI mode parity (reference run-gui.bat → server.mjs → fork
     index.mjs with the posted config): POST /sync overrides layer onto

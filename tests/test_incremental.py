@@ -883,3 +883,127 @@ def test_column_max_corrupt_footer_falls_back_to_none(spark, tmp_path):
     with open(_os.path.join(store.root, "t", rel), "wb") as fh:
         fh.write(b"PAR1")
     assert store.column_max("t", "alterid") is None
+
+
+_GATE_SPEC = """
+master:
+  - name: mst_ledger
+    collection: Ledger
+    fields:
+      - {name: guid, field: $Guid, type: text}
+      - {name: name, field: $Name, type: text}
+    cascade_delete: {trn_closingstock_ledger: ledger}
+  - name: mst_stock_item
+    collection: StockItem
+    fields:
+      - {name: guid, field: $Guid, type: text}
+      - {name: name, field: $Name, type: text}
+  - name: trn_closingstock_ledger
+    collection: Ledger.ClosingStockValues
+    nature: Derived
+    fields:
+      - {name: ledger, field: ..Name, type: text}
+      - {name: stock_date, field: $Date, type: text}
+      - {name: stock_value, field: $Amount, type: amount}
+transaction:
+  - name: trn_voucher
+    collection: Voucher
+    fields:
+      - {name: guid, field: $Guid, type: text}
+      - {name: voucher_number, field: $VoucherNumber, type: text}
+    cascade_delete: {trn_accounting: guid, trn_inventory: guid}
+  - name: trn_accounting
+    collection: Voucher.AllLedgerEntries
+    nature: Derived
+    fields:
+      - {name: guid, field: ..Guid, type: text}
+      - {name: ledger, field: $LedgerName, type: text}
+      - {name: _ledger, field: "$Guid:Ledger:$LedgerName", type: text}
+      - {name: amount, field: $Amount, type: amount}
+    cascade_update: {ledger: mst_ledger.name}
+  - name: trn_inventory
+    collection: Voucher.AllInventoryEntries
+    nature: Derived
+    fields:
+      - {name: guid, field: ..Guid, type: text}
+      - {name: item, field: $StockItemName, type: text}
+      - {name: _item, field: "$Guid:StockItem:$StockItemName", type: text}
+      - {name: quantity, field: $ActualQty, type: quantity}
+    cascade_update: {item: mst_stock_item.name}
+"""
+
+
+def _gate_frames(spark, vouchers, accounting, inventory):
+    return {
+        "mst_ledger": spark.createDataFrame(
+            [("l-1", "Cash", 1), ("l-2", "Sales", 2), ("l-3", "Stock", 3)],
+            "guid string, name string, alterid long"),
+        "mst_stock_item": spark.createDataFrame(
+            [("i-1", "Widget", 4), ("i-2", "Gadget", 5)],
+            "guid string, name string, alterid long"),
+        "trn_closingstock_ledger": spark.createDataFrame(
+            [("Stock", "2020-03-31", 300), ("Stock", "2021-03-31", 500)],
+            "ledger string, stock_date string, stock_value long"),
+        "trn_voucher": spark.createDataFrame(
+            vouchers, "guid string, voucher_number string, alterid long"),
+        "trn_accounting": spark.createDataFrame(
+            accounting,
+            "guid string, ledger string, _ledger string, amount long"),
+        "trn_inventory": spark.createDataFrame(
+            inventory, "guid string, item string, _item string, quantity long"),
+    }
+
+
+def test_voucher_only_batch_leaves_master_tables_uncommitted(spark, tmp_path):
+    """Change-gated merge: a table whose batch has no removed and no fresh
+    row gets no commit, no cascade-delete pass and no cascade-update
+    pass. A voucher-only batch therefore leaves every master table and
+    mst_ledger's name-keyed child trn_closingstock_ledger at their
+    version, still applies the voucher deletes, modifies and inserts
+    with their trn_accounting/trn_inventory cascades, and converges to
+    a full sync of the mutated source."""
+    from tally_database_loader_spark.sources.registry import load_yaml_spec
+    specs = load_yaml_spec(_GATE_SPEC)
+    acc = [("v-1", "Cash", "l-1", -100), ("v-1", "Sales", "l-2", 100),
+           ("v-2", "Cash", "l-1", -50), ("v-2", "Sales", "l-2", 50),
+           ("v-3", "Cash", "l-1", -5), ("v-3", "Sales", "l-2", 5)]
+    inv = [("v-1", "Widget", "i-1", 2), ("v-2", "Gadget", "i-2", 1),
+           ("v-3", "Widget", "i-1", 1)]
+    before = _gate_frames(
+        spark, [("v-1", "1", 10), ("v-2", "2", 11), ("v-3", "3", 12)],
+        acc, inv)
+    # delete v-2, modify v-3 (alterid 12 → 13), insert v-4 (alterid 14)
+    after = _gate_frames(
+        spark, [("v-1", "1", 10), ("v-3", "3", 13), ("v-4", "4", 14)],
+        [r for r in acc if r[0] == "v-1"]
+        + [("v-3", "Cash", "l-1", -8), ("v-3", "Sales", "l-2", 8),
+           ("v-4", "Cash", "l-1", -1), ("v-4", "Sales", "l-2", 1)],
+        [inv[0], ("v-3", "Widget", "i-1", 3), ("v-4", "Gadget", "i-2", 4)])
+
+    store = ParquetStore(str(tmp_path / "inc"), n_buckets=4)
+    for name, df in before.items():
+        store.write(df, name)
+    untouched = ("mst_ledger", "mst_stock_item", "trn_closingstock_ledger")
+    history = {t: store.history(t) for t in before}
+    stats = IncrementalSync(spark, store, specs).incremental_sync_frames(after)
+
+    assert not stats["skipped"]
+    assert stats["deleted"] == {"mst_ledger": 0, "mst_stock_item": 0,
+                                "trn_voucher": 2}        # v-2 gone, v-3 old
+    assert stats["appended"] == {"mst_ledger": 0, "mst_stock_item": 0,
+                                 "trn_voucher": 2}       # v-3 new, v-4
+    for t in untouched:
+        assert store.history(t) == history[t], f"{t} got a new version"
+    for t in ("trn_voucher", "trn_accounting", "trn_inventory"):
+        assert len(store.history(t)) > len(history[t]), f"{t} not merged"
+    assert {(r.guid, r.alterid) for r in store.read(spark, "trn_voucher")
+            .collect()} == {("v-1", 10), ("v-3", 13), ("v-4", 14)}
+    assert sorted(tuple(r) for r in store.read(spark, "trn_inventory")
+                  .collect()) == sorted(tuple(r) for r in
+                                        after["trn_inventory"].collect())
+
+    full = ParquetStore(str(tmp_path / "full"), n_buckets=4)
+    for name, df in after.items():
+        full.write(df, name)
+    for t in after:
+        assert _rows(spark, store, t) == _rows(spark, full, t), t

@@ -69,6 +69,40 @@ def test_read_tdl_response_is_distributed(spark, tmp_path):
     assert df.filter("first_date is not null").count() == 0
 
 
+def test_derived_response_opening_with_fldblank(spark, tmp_path):
+    """A nested collection's outer line is Tally's empty FldBlank field,
+    so a Derived table's response opens with <FLDBLANK></FLDBLANK> before
+    the first <F01>. That envelope header is not a row: both readers
+    return exactly the entry rows, typed."""
+    from tally_database_loader_spark.sources import tally_datasource
+    entries = [("v-1", "Cash", "-100.00", "0.00", "INR"),
+               ("v-1", "Sales", "100.00", "0.00", "INR"),
+               ("v-2", "Bank &amp; Co", "-7.50", "0.00", "USD")]
+    body, last = "", None
+    for g, led, amt, fx, cur in entries:
+        if g != last:
+            body += "<FLDBLANK></FLDBLANK>"   # one per voucher (outer line)
+            last = g
+        body += (f"<F01>{g}</F01><F02>{led}</F02><F03>{amt}</F03>"
+                 f"<F04>{fx}</F04><F05>{cur}</F05>\r\n")
+    d = tmp_path / "trn_accounting"
+    d.mkdir()
+    p = d / "trn_accounting.xml"
+    p.write_text(f"<ENVELOPE>{body}</ENVELOPE>", encoding="utf-8")
+    want = sorted((g, led.replace("&amp;", "&"), decimal.Decimal(amt),
+                   decimal.Decimal(fx), cur)
+                  for g, led, amt, fx, cur in entries)
+
+    spec = default_tables()["trn_accounting"]
+    df = read_tdl_response(spark, str(p), spec)
+    assert sorted(tuple(r) for r in df.collect()) == want
+
+    tally_datasource.register(spark)
+    ds = (spark.read.format("tally").option("table", "trn_accounting")
+          .option("path", str(d)).load())
+    assert sorted(tuple(r) for r in ds.collect()) == want
+
+
 def test_generate_tdl_xml_nesting_and_filters():
     spec = default_tables()["trn_bank"]  # 3-level nested collection
     xml = generate_tdl_xml(spec, company="Demo & Co")
